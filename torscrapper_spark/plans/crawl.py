@@ -35,7 +35,6 @@ frontier / bloom state writes, and one combined output write
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 
@@ -81,23 +80,8 @@ def _run_concurrently(jobs) -> None:
     any job propagate."""
     from concurrent.futures import ThreadPoolExecutor
 
-    profile = os.environ.get("TS_CRAWL_PROFILE") == "1"
-
-    def timed(j):
-        if not profile:
-            return j
-
-        def wrapper():
-            t0 = time.time()
-            try:
-                return j()
-            finally:
-                print(f"    [job {j.__name__}] {time.time() - t0:.2f}s",
-                      flush=True)
-        return wrapper
-
     with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-        futures = [ex.submit(timed(j)) for j in jobs]
+        futures = [ex.submit(j) for j in jobs]
         for f in futures:
             f.result()
 
@@ -430,13 +414,12 @@ def run_wave(
     soak up cores the next wave's barrier phases leave idle instead of
     serializing behind a commit barrier (VERDICT.md next-round #2c).
     """
-    profile = os.environ.get("TS_CRAWL_PROFILE") == "1"
     _marks: list[tuple[str, float]] = [("start", time.time())]
 
     def mark(label: str) -> None:
         # always recorded (4 clock reads/wave): the spans feed the
         # crawl summary's per-wave fixed-vs-scalable decomposition
-        # (VERDICT.md r2 next-round #8); `profile` only gates printing
+        # (VERDICT.md r2 next-round #8)
         _marks.append((label, time.time()))
 
     frontier = _read_frontier(spark, store, cfg, wave)
@@ -847,13 +830,6 @@ def run_wave(
         info["fetched"] = int(job_outputs())
         validated.unpersist()
         mark("outputs")
-        if profile:
-            prev = _marks[0][1]
-            spans = []
-            for label, tt in _marks[1:]:
-                spans.append(f"{label}={tt - prev:.2f}s")
-                prev = tt
-            print(f"[wave {wave}] " + " ".join(spans), flush=True)
 
     return info, finish_outputs
 
