@@ -44,6 +44,19 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def broadcast_threshold(spark):
+    """Setter for ``spark.sql.autoBroadcastJoinThreshold`` within one
+    test (it picks the seen check's regime); the session value is
+    restored afterwards, pass or fail."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        yield lambda value: spark.conf.set(key, str(value))
+    finally:
+        spark.conf.set(key, prev)
+
+
 @pytest.fixture(scope="session")
 def tiny_tables():
     return fixtures.generate_all(fixtures.TINY)

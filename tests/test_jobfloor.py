@@ -3,9 +3,13 @@
 The crawl's scale-killer class at high parallelism is the FIXED number
 of driver actions and snapshot writes per wave — scheduler round-trips
 and commit fsyncs that do not shrink with cores. The steady-wave design
-is pinned here:
+is pinned here, in both seen-check regimes (operators/seen.py
+``new_candidates``):
 
-  1 materialize action (fetch+validate+probe, pid collect piggybacked)
+  1 materialize action (fetch+validate+extract+seen check, filling the
+    seen check's cache): a noop write while seen fits the broadcast
+    budget (the tiny crawl at the default threshold), the filter
+    probe's flagged-pid collect at threshold -1
   4 snapshot writes: seen (n_new rides an observe), frontier (count
     rides an observe), bloom, ONE combined output (trace ⊇ pages ⊇
     metrics — the old separate pages/metrics writes are gone)
@@ -18,10 +22,15 @@ Two assertions:
   pages or metrics write;
 * a total Spark-job ceiling measured with AQE off. Jobs ≠ actions even
   then (every broadcast exchange submits its own collect job — this
-  wave plan carries ~7: robots, politeness, selected-removal, pos_keys,
-  hits, seq offsets), so the ceiling is an empirical regression bound:
-  measured 48 for init+3 waves; a reintroduced per-wave count job or
-  split output write adds ≥ 3.
+  wave plan carries robots, politeness, selected-removal and seq
+  offsets in both regimes, plus seen's url_hash in the exact regime
+  and pos_keys + hits in the probe regime), so the ceiling is an
+  empirical regression bound: measured 51 (exact) and 49 (probe) for
+  init+3 waves, each test alone in a fresh session (threshold -1 also
+  turns the un-hinted joins from broadcast into sort-merge joins, so
+  the probe regime has fewer broadcast jobs than a probe run at the
+  default threshold); a reintroduced per-wave count job or split
+  output write adds ≥ 3.
 """
 
 import os
@@ -30,9 +39,9 @@ import tempfile
 from torscrapper_spark.plans import crawl as C
 from torscrapper_spark.sources.tableio import SnapshotStore
 
-# measured 48 + 2 per-RUN dimension-validation jobs (run_crawl's
-# duplicate-domain check — once per call, not per wave); headroom < one
-# reintroduced write/wave
+# measured 51 / 49 (module docstring), both including the 2 per-RUN
+# dimension-validation jobs (run_crawl's duplicate-domain check — once
+# per call, not per wave); headroom < one reintroduced write/wave
 JOB_CEILING = 52
 
 
@@ -46,7 +55,7 @@ class _CountingStore(SnapshotStore):
         super().write(df, table, wave, partition_by)
 
 
-def test_steady_wave_write_and_job_floor(spark, tiny_dir):
+def _check_write_and_job_floor(spark, tiny_dir):
     sc = spark.sparkContext
 
     def jobs():
@@ -97,3 +106,17 @@ def test_steady_wave_write_and_job_floor(spark, tiny_dir):
         f"measured ceiling {JOB_CEILING} — a per-wave fixed job crept "
         "back in (see module docstring)"
     )
+
+
+def test_steady_wave_write_and_job_floor(spark, tiny_dir):
+    """Exact regime: the tiny crawl's seen table fits the default
+    broadcast budget."""
+    _check_write_and_job_floor(spark, tiny_dir)
+
+
+def test_steady_wave_write_and_job_floor_probe_regime(
+    spark, tiny_dir, broadcast_threshold
+):
+    """Probe regime: threshold -1 puts every wave above the budget."""
+    broadcast_threshold(-1)
+    _check_write_and_job_floor(spark, tiny_dir)

@@ -1,17 +1,35 @@
-"""URL-seen filter: exact anti-join + partitioned bloom fast path.
+"""URL-seen check: exact broadcast membership, filter-probed above the budget.
 
 SURVEY.md A7/A8; BASELINE.json:6 "partitioned cuckoo/bloom URL-seen
 filter keyed on canonicalized+hashed onion URLs".
 
 Semantics are anchored by the EXACT path: ``candidates LEFT ANTI JOIN
-seen ON url_hash``. The bloom path is a pure pre-filter — per
-hash-partition bitmaps (``pid = pmod(url_hash, P)``) built and probed in
-Arrow-batched pandas functions. A bloom has no false negatives, so
+seen ON url_hash``. :func:`new_candidates` flags every candidate
+``maybe_seen`` into one cached frame (the check cache) and picks how by
+one rule, the seen table's row count against Spark's own broadcast
+budget (``spark.sql.autoBroadcastJoinThreshold``, 16 B per ``long``
+key — Spark's size estimate for a one-column ``long`` row):
 
-  new = probe_negative(candidates)  ∪  (probe_positive(candidates) ∖ seen)
+* **seen fits the budget** — exact membership, seen's url_hash
+  broadcast (``BroadcastHashJoin ExistenceJoin BuildRight``), and the
+  new URLs are the unflagged rows. No probe, no cogroup, no residual
+  joins.
+* **seen exceeds the budget** (or the threshold is -1) — the
+  partitioned bloom (or cuckoo) filter is a pure pre-filter: per
+  hash-partition bitmaps (``pid = pmod(url_hash, P)``) built and probed
+  in Arrow-batched pandas functions. A bloom has no false negatives, so
 
-is exactly equal to the anti-join, while the expensive shuffle against
-the 10^10-row seen table only carries the (tiny) bloom-positive subset.
+    new = probe_negative(candidates)  ∪  (probe_positive(candidates) ∖ seen)
+
+  is exactly equal to the anti-join, while the pid-pruned seen scan
+  only meets the (tiny) bloom-positive subset. Without a filter every
+  candidate counts as positive and the same residual runs.
+
+No plan here exchanges the seen table. The filter state is updated and
+snapshotted every wave in both regimes (the crawl loop does that), so
+crossing the budget mid-crawl needs no rebuild. Where the probe starts
+to beat the broadcast has not been measured: the budget is Spark's
+default, reused (ROADMAP C).
 
 Scale notes:
   * bitmaps live as one ``binary`` row per pid — P≈150–200 shards of
@@ -35,7 +53,8 @@ BLOOM_SCHEMA = "pid int, bitmap binary, nbits int, k int"
 
 
 def exact_new(candidates: DataFrame, seen: DataFrame) -> DataFrame:
-    """Candidates whose url_hash is not in the seen set (authoritative)."""
+    """Candidates whose url_hash is not in the seen set — the reference
+    semantics every plan of :func:`new_candidates` must equal."""
     return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
 
 
@@ -380,38 +399,75 @@ def new_from_probed(
     return probed.join(F.broadcast(hits), cond, "left_anti").drop(*drop_cols)
 
 
+# Spark's own size estimate for a row of one ``long`` column (8 B row
+# overhead + 8 B data, ``EstimationUtils.getSizePerRow``)
+SEEN_KEY_BYTES = 16
+
+
+def _seen_fits_broadcast(spark, seen_rows: int) -> bool:
+    """True while ``seen_rows`` url_hash keys at :data:`SEEN_KEY_BYTES`
+    fit ``spark.sql.autoBroadcastJoinThreshold`` (-1 = broadcasting
+    off), read in bytes as the session's SQLConf resolves it."""
+    budget = int(
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    return budget >= 0 and int(seen_rows) * SEEN_KEY_BYTES <= budget
+
+
 def new_candidates(
     candidates: DataFrame,
     seen: DataFrame,
     bloom: DataFrame | None,
     num_shards: int,
     use_bloom: bool,
+    seen_rows: int,
     probe_fn=None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Exact set difference, probabilistic-prefilter-accelerated when
-    enabled. ``probe_fn`` selects the prefilter probe (defaults to
+) -> tuple[DataFrame, DataFrame]:
+    """Exact set difference ``candidates ∖ seen`` on url_hash. This is
+    THE production seen check: the wave loop calls it (through the
+    module-level name in plans/crawl.py) so the tests in
+    tests/test_operators.py assert the plans production runs.
+
+    Every candidate first gets ``pid`` and a ``maybe_seen`` flag in the
+    check cache; how the flag is computed follows from ``seen_rows``
+    (the crawl passes the manifest's ``seen_total``, so it costs no
+    job) and Spark's broadcast budget, nothing else:
+
+    * ``seen_rows × 16 B ≤ spark.sql.autoBroadcastJoinThreshold`` —
+      exact membership against ``broadcast(seen.url_hash)``
+      (``BroadcastHashJoin ExistenceJoin BuildRight``); ``new`` is the
+      unflagged rows. At crawl sizes a wave's true duplicates spread
+      over every pid, so the probe's pid shuffle, Python cogroup and
+      two residual broadcasts buy no pruning while seen is small
+      enough to broadcast.
+    * above the budget, or with the threshold at -1 — the filter probe
+      (``use_bloom``) and the pid-pruned residual described below; or,
+      without a filter, every candidate flagged and the same residual.
+
+    No branch exchanges the seen table: it is either the broadcast
+    build side (while small) or a map-side scanned stream. The budget
+    is Spark's default, not a measured crossover.
+
+    ``probe_fn`` selects the prefilter probe (defaults to
     :func:`probe_bloom`; the wave loop passes ``probe_cuckoo`` when the
     config selects the cuckoo shards — injected by the caller so this
-    module never imports the cuckoo twin). This is THE production
-    path: the wave loop calls it directly, so the pruning tests in
-    tests/test_operators.py assert the exact code production runs
-    (code-review r5: an inline copy in run_wave had left this helper
-    test-only — twin-drift hazard).
+    module never imports the cuckoo twin).
 
-    Returns ``(new, probe_cache)``; ``probe_cache`` (None on the exact
-    path) is a persisted intermediate the caller must unpersist once the
-    wave has materialized — an explicit tuple, not an attribute smuggled
-    on the DataFrame (ADVICE.md r2: a wrapper between here and the
-    caller would silently drop a monkey-patched attribute and leak the
-    cache for the session).
+    Returns ``(new, check_cache)``; ``check_cache`` (candidates + pid +
+    maybe_seen, exact in the broadcast regime) is a persisted
+    intermediate the caller must unpersist once the wave has
+    materialized — an explicit tuple, not an attribute smuggled on the
+    DataFrame (ADVICE.md r2: a wrapper between here and the caller
+    would silently drop a monkey-patched attribute and leak the cache
+    for the session). The action that first fills it is, in the crawl,
+    the wave's materialize job (fetch + validate + extract + check): a
+    noop write in the broadcast regime, and above the budget the
+    collect of the flagged rows' distinct pids (bounded by the shard
+    count, ~200 values at 10^10 scale).
 
-    Round 1 shipped ``probed LEFT ANTI seen`` with an ``AND maybe_seen``
-    residual — correct, but it SHUFFLED the entire cumulative seen table
-    on url_hash every wave (VERDICT.md "What's wrong" #4): at 10^10 seen
-    rows that shuffle dominates every wave and only grows. This
-    formulation never moves the seen table at all:
+    The probe path:
 
-      probed   = candidates + maybe_seen        (bloom cogroup, cached —
+      probed   = candidates + maybe_seen        (filter cogroup, cached —
                  consumed twice below, computed once)
       pos_keys = σ(maybe_seen) π(pid, url_hash) (tiny: bloom positives =
                  true dups + ε·|candidates| false positives)
@@ -428,41 +484,45 @@ def new_candidates(
     runs on ``(pid, url_hash)`` and the seen scan is pruned to the pids
     the wave's bloom-positives actually touch — O(hit buckets) instead
     of O(|seen|) files. The pruning is STATIC, not Catalyst DPP: the
-    positives' distinct pids (≤ num_shards small ints) are collected
-    from the already-persisted probe cache and planted as a literal
-    ``pid IN (…)`` partition filter. Spark's dynamic-partition-pruning
-    rule was measured to DECLINE this join — its ``isLikelySelective``
-    heuristic rejects the bare-boolean ``maybe_seen`` filter on the
-    build side (and BooleanSimplification collapses any ``= true``
-    rewrite before the DPP rule runs) — so relying on it silently read
-    every bucket. The collect is one tiny job over the cached probe
-    output, bounded by the shard count (~200 values at 10^10 scale).
-    (On Iceberg the same plan falls out of a ``bucket(N, url_hash)``
+    collected pids are planted as a literal ``pid IN (…)`` partition
+    filter. Spark's dynamic-partition-pruning rule was measured to
+    DECLINE this join — its ``isLikelySelective`` heuristic rejects the
+    bare-boolean ``maybe_seen`` filter on the build side (and
+    BooleanSimplification collapses any ``= true`` rewrite before the
+    DPP rule runs) — so relying on it silently read every bucket. (On
+    Iceberg the same plan falls out of a ``bucket(N, url_hash)``
     partition transform plus the same IN filter.)
 
-    Per-wave cost is O(candidates) shuffle + a bucket-pruned,
-    column-pruned seen scan — no O(|seen|) exchange. Both broadcasts are
-    politeness-bounded (≤ wave candidates ≈ 10^5-10^6 hashes, a few MB).
-    Exactness: bloom has no false negatives, so every true duplicate is
-    bloom-positive and lands in ``hits``; false positives are removed by
-    the anti-join.
+    Per-wave cost above the budget is O(candidates) shuffle + a
+    bucket-pruned, column-pruned seen scan — no O(|seen|) exchange.
+    Both broadcasts are politeness-bounded (≤ wave candidates ≈
+    10^5-10^6 hashes, a few MB). Exactness: bloom has no false
+    negatives, so every true duplicate is bloom-positive and lands in
+    ``hits``; false positives are removed by the anti-join.
     """
-    if not use_bloom or bloom is None:
-        return exact_new(candidates, seen), None
-    probe = probe_fn if probe_fn is not None else probe_bloom
-    probed = probe(candidates, bloom, num_shards, keep_pid=True).persist()
-    # static bucket pruning (see docstring): collect the positives'
-    # distinct pids from the persisted probe cache and prune the
-    # partitioned seen scan with a literal IN filter. The wave loop
-    # piggybacks this collect on the persisted probe cache's FIRST
-    # materialization (plans/crawl.py: the distinct-pid collect is the
-    # action that fills the cache, so probe + collect cost one job);
-    # here it is the same collect — a dedicated tiny job only when the
-    # cache is already warm.
+    exact = _seen_fits_broadcast(candidates.sparkSession, seen_rows)
+    if exact:
+        checked = with_pid(candidates, num_shards).withColumn(
+            "maybe_seen",
+            F.col("url_hash").isin(F.broadcast(seen.select("url_hash"))),
+        )
+    elif use_bloom and bloom is not None:
+        probe = probe_fn if probe_fn is not None else probe_bloom
+        checked = probe(candidates, bloom, num_shards, keep_pid=True)
+    else:
+        checked = with_pid(candidates, num_shards).withColumn(
+            "maybe_seen", F.lit(True)
+        )
+    checked = checked.persist()
+    if exact:
+        # no pids to collect: a noop write is the action that fills
+        # the cache
+        checked.write.format("noop").mode("overwrite").save()
+        new = checked.filter(~F.col("maybe_seen")).drop("maybe_seen", "pid")
+        return new, checked
     pos_pids = [
         int(r.pid)
-        for r in probed.filter(F.col("maybe_seen"))
+        for r in checked.filter(F.col("maybe_seen"))
         .select("pid").distinct().collect()
     ]
-    out = new_from_probed(probed, seen, num_shards, pos_pids)
-    return out, probed
+    return new_from_probed(checked, seen, num_shards, pos_pids), checked
